@@ -17,6 +17,8 @@ collects to the driver.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -474,19 +476,22 @@ def prefix_filter_near_dup_pairs(
     # a pair sharing several prefix shingles repeats — dedup on the id
     # pair (sizes are functionally dependent, kept as grouping keys).
     # Round 9 (§3 "reduce the big side before shuffling it"): the
-    # positional filter drops pairs whose best overlap bound max_w ub_w
-    # cannot reach the J >= t requirement n_inter >= t/(1+t)·(sa+sb)
+    # positional filter drops pairs whose tightest overlap bound
+    # min_w ub_w cannot reach the J >= t requirement
+    # n_inter >= t/(1+t)·(sa+sb)
     # BEFORE the two wide array-fetch joins and the per-pair
     # array_intersect — verification volume was the dominant cost
     # (310k candidates at sf0.1, most hopeless). The prune is
     # output-safe: ub_w is a valid upper bound on n_inter for every
-    # shared prefix shingle (proof in the combos comment), and the
+    # shared prefix shingle (proof in the combos comment), so their
+    # minimum is one too and prunes at least as much as any single
+    # ub_w; the
     # comparison carries a 1e-6 slack so float rounding can only KEEP
     # a borderline pair (exact verification decides it), never drop.
     cand = (
         posts.select(F.explode(pruned).alias("pr"))
         .groupBy("pr.id_a", "pr.id_b", "pr.size_a", "pr.size_b")
-        .agg(F.max("pr.ub").alias("__ub"))
+        .agg(F.min("pr.ub").alias("__ub"))
         .filter(
             (1.0 + threshold) * F.col("__ub")
             >= threshold * (F.col("size_a") + F.col("size_b")) - 1e-6
@@ -685,11 +690,13 @@ def connected_components(
     # aggregate over the just-pinned frame replaces the former
     # join-old-vs-new + limit + count job per sweep (same sweep count,
     # strictly less work per sweep; decimal(38) sum cannot overflow).
-    # The sum form requires NUMERIC node ids (a string label has no
-    # overflow-free exact sum, and ANSI would reject the cast); for any
-    # other id type fall back to the type-generic changed-row check, so
-    # the operator's contract stays "any orderable id" (round 9,
-    # ADVICE). prev_sum is SEEDED from the initial identity labels
+    # The sum form requires INTEGRAL node ids — integer types or
+    # decimal(p,0). A string label has no overflow-free exact sum (and
+    # ANSI would reject the cast), and the decimal(38,0) cast ROUNDS a
+    # scaled decimal(p,s>0) label, so two different label sets can sum
+    # equal and stop the loop early. Every other id type falls back to
+    # the type-generic changed-row check, so the operator's contract
+    # stays "any orderable id" (round 9, ADVICE). prev_sum is SEEDED from the initial identity labels
     # (one 1-row agg on the just-pinned frame) so an already-converged
     # graph — e.g. an empty edge set, which previously paid all
     # max_iter sweeps because None never compared equal — breaks after
@@ -697,7 +704,7 @@ def connected_components(
     label_type = dict(labels.dtypes)["label"]
     numeric_labels = label_type in (
         "tinyint", "smallint", "int", "bigint"
-    ) or label_type.startswith("decimal")
+    ) or re.fullmatch(r"decimal\(\d+,0\)", label_type) is not None
 
     def _label_sum(frame):
         return frame.agg(

@@ -2,8 +2,8 @@
 
 Reference parity (SURVEY §2.4 A1-A3, §2.3 J3, §2.5 W4):
 - A1 conditional OI: order_imbalance.py:242-249 applied per bin at
-  :294-298 — OI = (Σ size[dir==-1] − Σ size[dir==+1]) /
-  (Σ size[dir==-1] + Σ size[dir==+1])
+  :294-298 — OI = (Σ size[direction = -1] − Σ size[direction = +1]) /
+  (Σ size[direction = -1] + Σ size[direction = +1])
 - A2 iceberg-split OI: order_imbalance.py:381-386
 - A3 first/last price per bin: order_imbalance.py:304-309 — pandas
   first/last is file-order dependent; we pin determinism with
@@ -11,6 +11,16 @@ Reference parity (SURVEY §2.4 A1-A3, §2.3 J3, §2.5 W4):
 - J3 bin densification: order_imbalance.py:301,316,338-359 — left-join
   onto the complete bin grid, OI zero-filled for empty bins
 - W4 future return: order_imbalance.py:91-93 — lead(log_ret)
+
+Exactness rule: :func:`oi_sql` is the only place the OI formula is
+written. It is one SQL string read by both engines (Spark through
+:func:`oi_expr`, DuckDB oracles verbatim). Each side sums integer
+cents (sizes are 2-dp; sub-cent sizes are quantized to the cent), so
+the sums are exact in any aggregation order and the final
+``CAST(sell - buy AS DOUBLE) / (sell + buy)`` is the same double in
+both engines. Every OI output is then rounded on the integer grid,
+``round(x * 1e6)::BIGINT / 1e6`` (``functions.exact.r6``), never with
+``round(x, 6)``, which the engines can round apart near a midpoint.
 
 Scale notes: the OI aggregation is a single map-side-combinable
 groupBy — conditional sums, no UDF, fully inside whole-stage codegen.
@@ -25,23 +35,25 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dissertation_iceberg_spark.functions.exact import cents_sql, r6
 from dissertation_iceberg_spark.functions.time_bins import bin_end
 
 
-def _csum(pred: Column, size_col: Column) -> Column:
-    return F.sum(F.when(pred, size_col).otherwise(F.lit(0.0)))
+def oi_sql(pred: str = "TRUE", direction: str = "direction", size: str = "size") -> str:
+    """The A1 kernel as one SQL aggregate expression over the rows that
+    satisfy ``pred`` (NULL if they carry no volume)."""
+    cents = cents_sql(size)
+    sell = f"sum(CASE WHEN {direction} = -1 AND ({pred}) THEN {cents} ELSE 0 END)"
+    buy = f"sum(CASE WHEN {direction} = 1 AND ({pred}) THEN {cents} ELSE 0 END)"
+    return (
+        f"CASE WHEN ({sell} + {buy}) <> 0 "
+        f"THEN CAST({sell} - {buy} AS DOUBLE) / ({sell} + {buy}) END"
+    )
 
 
-def oi_expr(dir_col: Column, size_col: Column, extra_pred: Column | None = None) -> Column:
-    """The A1 kernel as a single aggregate expression (NULL if no volume)."""
-    sell_p = dir_col == -1
-    buy_p = dir_col == 1
-    if extra_pred is not None:
-        sell_p = sell_p & extra_pred
-        buy_p = buy_p & extra_pred
-    sell = _csum(sell_p, size_col)
-    buy = _csum(buy_p, size_col)
-    return F.when((sell + buy) != 0, (sell - buy) / (sell + buy))
+def oi_expr(pred: str = "TRUE", direction: str = "direction", size: str = "size") -> Column:
+    """:func:`oi_sql` as a Spark aggregate Column."""
+    return F.expr(oi_sql(pred, direction, size))
 
 
 def binned_oi(
@@ -55,14 +67,12 @@ def binned_oi(
     group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Per-bin OI + deterministic first/last price + event count."""
-    d = F.col(dir_col)
-    s = F.col(size_col)
     keys = [*(group_cols or []), "bin"]
     return (
         df.withColumn("bin", bin_end(ts_col, delta_sec))
         .groupBy(*keys)
         .agg(
-            oi_expr(d, s).alias("order_imbalance"),
+            oi_expr(direction=dir_col, size=size_col).alias("order_imbalance"),
             F.count(F.lit(1)).alias("n_events"),
             F.expr(f"min_by({price_col}, {seq_col})").alias("first_price"),
             F.expr(f"max_by({price_col}, {seq_col})").alias("last_price"),
@@ -76,7 +86,6 @@ def densify(
     bin_col: str = "bin",
     zero_fill: tuple[str, ...] = ("order_imbalance", "n_events"),
     group_cols: list[str] | None = None,
-    hint_broadcast: bool = True,
 ) -> DataFrame:
     """Left-join the binned frame onto its complete calendar grid.
 
@@ -89,9 +98,7 @@ def densify(
     Broadcast mechanics (round-2 clarification): the grid CANNOT be the
     build side — a grid-preserving left join only admits BuildRight, so
     the hint goes on the binned aggregate, which has at most one row per
-    non-empty bin and is therefore never larger than the grid. For long
-    spans at fine deltas (bin count beyond broadcast limits) pass
-    ``hint_broadcast=False`` and both sides shuffle on the bin key.
+    non-empty bin and is therefore never larger than the grid.
     """
     gc = group_cols or []
     interval = F.expr(f"INTERVAL {int(delta_sec)} SECONDS")
@@ -108,8 +115,7 @@ def densify(
         grid = bounds.select(
             F.explode(F.sequence("lo", "hi", interval)).alias(bin_col)
         )
-        right = F.broadcast(binned) if hint_broadcast else binned
-        out = grid.join(right, on=bin_col, how="left")
+        out = grid.join(F.broadcast(binned), on=bin_col, how="left")
     for c in zero_fill:
         if c in binned.columns:
             out = out.withColumn(c, F.coalesce(F.col(c), F.lit(0)))
@@ -148,21 +154,18 @@ def with_returns(
     )
 
 
-def oi_pipeline(
-    df: DataFrame,
-    delta_sec: int,
-    round_to: int = 6,
-    **kw,
-) -> DataFrame:
-    """A1 + A3 -> J3 densify -> W4 returns; floats rounded for oracle
-    stability. This is the flagship end-to-end slice (SURVEY §7 step 3).
+def oi_pipeline(df: DataFrame, delta_sec: int, **kw) -> DataFrame:
+    """A1 + A3 -> J3 densify -> W4 returns; floats rounded to 6 dp for
+    oracle stability (OI on the integer grid). This is the flagship
+    end-to-end slice (SURVEY §7 step 3).
     """
     group_cols = kw.pop("group_cols", None)
     b = binned_oi(df, delta_sec, group_cols=group_cols, **kw)
     dz = densify(b, delta_sec, group_cols=group_cols)
     r = with_returns(dz, group_cols=group_cols)
-    for c in ("order_imbalance", "first_price", "last_price", "log_ret", "fut_log_ret"):
-        r = r.withColumn(c, F.round(F.col(c), round_to))
+    r = r.withColumn("order_imbalance", r6(F.col("order_imbalance")))
+    for c in ("first_price", "last_price", "log_ret", "fut_log_ret"):
+        r = r.withColumn(c, F.round(F.col(c), 6))
     return r.select(
         *(group_cols or []),
         "bin",

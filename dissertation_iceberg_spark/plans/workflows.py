@@ -65,17 +65,14 @@ def oi_frame(
     ``tagged`` frame when looping deltas."""
     if tagged is None:
         tagged = tagged_lob(spark, sf_dir, tolerance_us)
-    d, s = F.col("direction"), F.col("size")
-    is_exec = F.col("event_type") == "purchase"
-    is_hid = F.col("event_type") == "error"
     binned = (
         tagged.withColumn("bin", bin_end("ts", delta_sec))
         .groupBy("bin")
         .agg(
-            oi_expr(d, s, is_exec & (F.col("iceberg") == 0)).alias("oi_vis"),
-            oi_expr(d, s, is_exec & (F.col("iceberg") == 1)).alias("oi_ib"),
-            oi_expr(d, s, is_hid).alias("oi_hid"),
-            F.count(F.when(is_exec, 1)).alias("n_exec"),
+            oi_expr("event_type = 'purchase' AND iceberg = 0").alias("oi_vis"),
+            oi_expr("event_type = 'purchase' AND iceberg = 1").alias("oi_ib"),
+            oi_expr("event_type = 'error'").alias("oi_hid"),
+            F.count(F.when(F.col("event_type") == "purchase", 1)).alias("n_exec"),
             F.expr("min_by(value, event_id)").alias("first_price"),
             F.expr("max_by(value, event_id)").alias("last_price"),
         )

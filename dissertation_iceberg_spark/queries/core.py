@@ -5,6 +5,14 @@ semantics, identical aliases, identical float rounding. Sums over
 unordered row sets use the "integer-scaled sum" trick (values are 2-dp
 decimals: scale ×100 → exact BIGINT sums in both engines → rescale)
 so results are bit-stable regardless of partial-aggregation order.
+
+Order imbalance follows one exactness rule, written once in
+``operators.order_imbalance.oi_sql``: both engines read the same SQL
+string, which sums integer cents per side, and every OI output is
+rounded on the integer grid (``functions.exact.r6`` /
+``r6_sql``: ``round(x * 1e6)::BIGINT / 1e6``), never with
+``round(x, 6)``. The oracles below splice that string in rather than
+restating the formula.
 """
 
 from __future__ import annotations
@@ -12,12 +20,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dissertation_iceberg_spark.functions.exact import r6, r6_sql
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
 from dissertation_iceberg_spark.io import load_table, lob_events
 from dissertation_iceberg_spark.operators import preprocessing as prep
 from dissertation_iceberg_spark.operators import stats as stats_ops
 from dissertation_iceberg_spark.operators.iceberg import asof_next_within
-from dissertation_iceberg_spark.operators.order_imbalance import oi_pipeline
+from dissertation_iceberg_spark.operators.order_imbalance import (
+    oi_expr,
+    oi_pipeline,
+    oi_sql,
+)
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.queries.sqlgen import EVENTS_LOB_SQL
 
@@ -33,13 +46,7 @@ _OI_ORACLE = f"""
 WITH lob AS ({EVENTS_LOB_SQL}),
 b AS (
   SELECT {bin_end_sql("ts", DELTA_SEC)} AS bin,
-         CASE WHEN (sum(CASE WHEN direction=-1 THEN size ELSE 0 END)
-                  + sum(CASE WHEN direction= 1 THEN size ELSE 0 END)) <> 0
-              THEN (sum(CASE WHEN direction=-1 THEN size ELSE 0 END)
-                  - sum(CASE WHEN direction= 1 THEN size ELSE 0 END))
-                 / (sum(CASE WHEN direction=-1 THEN size ELSE 0 END)
-                  + sum(CASE WHEN direction= 1 THEN size ELSE 0 END))
-         END AS order_imbalance,
+         {oi_sql()} AS order_imbalance,
          count(*) AS n_events,
          min_by(value, event_id) AS first_price,
          max_by(value, event_id) AS last_price
@@ -57,7 +64,7 @@ d AS (
               THEN ln(b.last_price) - ln(b.first_price) END AS log_ret
   FROM grid g LEFT JOIN b ON g.bin = b.bin)
 SELECT bin,
-       round(order_imbalance, 6) AS order_imbalance,
+       {r6_sql("order_imbalance")} AS order_imbalance,
        n_events,
        round(first_price, 6) AS first_price,
        round(last_price, 6) AS last_price,
@@ -88,13 +95,7 @@ _OI_PK_ORACLE = f"""
 WITH lob AS ({EVENTS_LOB_SQL}),
 b AS (
   SELECT user_id, {bin_end_sql("ts", _PK_DELTA)} AS bin,
-         CASE WHEN (sum(CASE WHEN direction=-1 THEN size ELSE 0 END)
-                  + sum(CASE WHEN direction= 1 THEN size ELSE 0 END)) <> 0
-              THEN (sum(CASE WHEN direction=-1 THEN size ELSE 0 END)
-                  - sum(CASE WHEN direction= 1 THEN size ELSE 0 END))
-                 / (sum(CASE WHEN direction=-1 THEN size ELSE 0 END)
-                  + sum(CASE WHEN direction= 1 THEN size ELSE 0 END))
-         END AS order_imbalance,
+         {oi_sql()} AS order_imbalance,
          count(*) AS n_events,
          min_by(value, event_id) AS first_price,
          max_by(value, event_id) AS last_price
@@ -112,7 +113,7 @@ d AS (
               THEN ln(b.last_price) - ln(b.first_price) END AS log_ret
   FROM grid g LEFT JOIN b ON g.user_id = b.user_id AND g.bin = b.bin)
 SELECT user_id, bin,
-       round(order_imbalance, 6) AS order_imbalance,
+       {r6_sql("order_imbalance")} AS order_imbalance,
        n_events,
        round(first_price, 6) AS first_price,
        round(last_price, 6) AS last_price,
@@ -543,20 +544,8 @@ execs AS (
             THEN 1 ELSE 0 END AS iceberg
   FROM t WHERE event_type = 'purchase')
 SELECT {bin_end_sql("ts", DELTA_SEC)} AS bin,
-  round(CASE WHEN (sum(CASE WHEN direction=-1 AND iceberg=0 THEN size ELSE 0 END)
-               + sum(CASE WHEN direction=1 AND iceberg=0 THEN size ELSE 0 END)) <> 0
-        THEN (sum(CASE WHEN direction=-1 AND iceberg=0 THEN size ELSE 0 END)
-            - sum(CASE WHEN direction=1 AND iceberg=0 THEN size ELSE 0 END))
-           / (sum(CASE WHEN direction=-1 AND iceberg=0 THEN size ELSE 0 END)
-            + sum(CASE WHEN direction=1 AND iceberg=0 THEN size ELSE 0 END)) END, 6)
-      AS oi_vis,
-  round(CASE WHEN (sum(CASE WHEN direction=-1 AND iceberg=1 THEN size ELSE 0 END)
-               + sum(CASE WHEN direction=1 AND iceberg=1 THEN size ELSE 0 END)) <> 0
-        THEN (sum(CASE WHEN direction=-1 AND iceberg=1 THEN size ELSE 0 END)
-            - sum(CASE WHEN direction=1 AND iceberg=1 THEN size ELSE 0 END))
-           / (sum(CASE WHEN direction=-1 AND iceberg=1 THEN size ELSE 0 END)
-            + sum(CASE WHEN direction=1 AND iceberg=1 THEN size ELSE 0 END)) END, 6)
-      AS oi_ib,
+  {r6_sql(oi_sql("iceberg = 0"))} AS oi_vis,
+  {r6_sql(oi_sql("iceberg = 1"))} AS oi_ib,
   count(*) AS n_execs
 FROM execs GROUP BY 1
 """
@@ -566,8 +555,6 @@ FROM execs GROUP BY 1
 def iceberg_split_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: per-bin OI computed separately over iceberg=0 / iceberg=1
     executions in ONE aggregation pass (order_imbalance.py:381-386)."""
-    from dissertation_iceberg_spark.operators.order_imbalance import oi_expr
-
     df = lob_events(spark, sf_dir)
     tagged = asof_next_within(
         df,
@@ -576,13 +563,12 @@ def iceberg_split_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
         by_cols=["user_id"],
         tolerance_us=ICEBERG_TOL_US,
     ).filter(F.col("event_type") == "purchase")
-    d, s = F.col("direction"), F.col("size")
     return (
         tagged.withColumn("bin", bin_end("ts", DELTA_SEC))
         .groupBy("bin")
         .agg(
-            F.round(oi_expr(d, s, F.col("iceberg") == 0), 6).alias("oi_vis"),
-            F.round(oi_expr(d, s, F.col("iceberg") == 1), 6).alias("oi_ib"),
+            r6(oi_expr("iceberg = 0")).alias("oi_vis"),
+            r6(oi_expr("iceberg = 1")).alias("oi_ib"),
             F.count(F.lit(1)).alias("n_execs"),
         )
     )

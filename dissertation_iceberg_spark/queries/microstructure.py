@@ -25,12 +25,18 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dissertation_iceberg_spark.functions.exact import cents_sql, r6, r6_sql
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
 from dissertation_iceberg_spark.io import load_table, lob_events
+from dissertation_iceberg_spark.operators.order_imbalance import (
+    densify,
+    oi_expr,
+    oi_sql,
+)
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.queries.sqlgen import EVENTS_LOB_SQL
 
-_CENTS = "CAST(round(value * 100) AS BIGINT)"
+_CENTS = cents_sql("value")
 
 
 def _lob_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -52,21 +58,6 @@ _LN_MICRO_SQL = (
     "CASE WHEN ({x}) > 0 THEN "
     "CAST(round(ln(CAST({x} AS DOUBLE)) * 1e6) AS BIGINT) END"
 )
-
-
-def _r6(col):
-    """6-dp display rounding, cross-engine-stable form.
-
-    ``F.round(x, 6)`` diverges between engines near decimal midpoints
-    (Spark rounds the exact binary expansion via BigDecimal; DuckDB
-    multiplies by 1e6 and nearbyints) — observed 1-in-1e3 rows at
-    sf0.1. Round-to-INTEGER of the identical double is bit-stable, so
-    the portable form is round(x*1e6)::BIGINT / 1e6 on BOTH sides
-    (mirrored by :data:`_R6_SQL`)."""
-    return F.round(col * 1e6).cast("long") / 1e6
-
-
-_R6_SQL = "CAST(round(({x}) * 1e6) AS BIGINT) / 1e6"
 
 
 # --------------------------------------------------------------------------
@@ -96,9 +87,9 @@ c AS (
            / (CAST(n AS DOUBLE) * n) AS cov
   FROM s)
 SELECT user_id, n,
-  {_R6_SQL.format(x="cov / 1e4")} AS dp_autocov,
+  {r6_sql("cov / 1e4")} AS dp_autocov,
   CASE WHEN cov < 0
-       THEN {_R6_SQL.format(x="2 * sqrt(-cov) / 100")}
+       THEN {r6_sql("2 * sqrt(-cov) / 100")}
   END AS roll_spread
 FROM c
 """
@@ -143,8 +134,8 @@ def roll_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "user_id",
         "n",
-        _r6(cov / 1e4).alias("dp_autocov"),
-        F.when(cov < 0, _r6(2 * F.sqrt(-cov) / 100)).alias("roll_spread"),
+        r6(cov / 1e4).alias("dp_autocov"),
+        F.when(cov < 0, r6(2 * F.sqrt(-cov) / 100)).alias("roll_spread"),
     )
 
 
@@ -172,7 +163,7 @@ r AS (
   WHERE first_cents > 0 AND last_cents > 0 AND dv_cents2 > 0)
 SELECT user_id, count(*) AS n_days,
        CAST(sum(illiq_micro) AS BIGINT) AS illiq_micro_sum,
-       {_R6_SQL.format(x="CAST(sum(illiq_micro) AS DOUBLE) / count(*) / 1e6")}
+       {r6_sql("CAST(sum(illiq_micro) AS DOUBLE) / count(*) / 1e6")}
          AS amihud_illiq
 FROM r GROUP BY 1
 """
@@ -221,7 +212,7 @@ def amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_days"),
         F.sum("illiq_micro").cast("long").alias("illiq_micro_sum"),
-        _r6(F.sum("illiq_micro").cast("double") / F.count(F.lit(1)) / 1e6).alias(
+        r6(F.sum("illiq_micro").cast("double") / F.count(F.lit(1)) / 1e6).alias(
             "amihud_illiq"
         ),
     )
@@ -256,9 +247,9 @@ c AS (
   FROM s
   WHERE (CAST(n_bins AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) <> 0)
 SELECT user_id, n_bins,
-  {_R6_SQL.format(x="slope * 1e6")} AS kyle_lambda_x1e6,
-  {_R6_SQL.format(
-      x="(CAST(sy AS DOUBLE) - slope * CAST(sx AS DOUBLE))"
+  {r6_sql("slope * 1e6")} AS kyle_lambda_x1e6,
+  {r6_sql(
+      "(CAST(sy AS DOUBLE) - slope * CAST(sx AS DOUBLE))"
         " / CAST(n_bins AS DOUBLE) / 100")}
     AS intercept_dollars
 FROM c
@@ -309,8 +300,8 @@ def kyle_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.filter(den != 0).select(
         "user_id",
         "n_bins",
-        _r6(slope * 1e6).alias("kyle_lambda_x1e6"),
-        _r6(
+        r6(slope * 1e6).alias("kyle_lambda_x1e6"),
+        r6(
             (F.col("sy").cast("double") - slope * F.col("sx").cast("double"))
             / nd
             / 100
@@ -345,12 +336,12 @@ s AS (
               AS BIGINT) AS bp_micro2
   FROM rr GROUP BY 1, 2)
 SELECT user_id, day, n_rets,
-       {_R6_SQL.format(x="CAST(rv_micro2 AS DOUBLE) / 1e12")} AS realized_var,
-       {_R6_SQL.format(x="pi() / 2 * CAST(bp_micro2 AS DOUBLE) / 1e12")}
+       {r6_sql("CAST(rv_micro2 AS DOUBLE) / 1e12")} AS realized_var,
+       {r6_sql("pi() / 2 * CAST(bp_micro2 AS DOUBLE) / 1e12")}
          AS bipower_var,
        CASE WHEN rv_micro2 > 0
-            THEN {_R6_SQL.format(
-                x="greatest(0.0, (CAST(rv_micro2 AS DOUBLE)"
+            THEN {r6_sql(
+                "greatest(0.0, (CAST(rv_micro2 AS DOUBLE)"
                   " - pi() / 2 * CAST(bp_micro2 AS DOUBLE))"
                   " / CAST(rv_micro2 AS DOUBLE))")}
        END AS jump_ratio
@@ -415,13 +406,13 @@ def realized_bipower_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "day",
         "n_rets",
-        _r6(F.col("rv_micro2").cast("double") / 1e12).alias("realized_var"),
-        _r6(half_pi * F.col("bp_micro2").cast("double") / 1e12).alias(
+        r6(F.col("rv_micro2").cast("double") / 1e12).alias("realized_var"),
+        r6(half_pi * F.col("bp_micro2").cast("double") / 1e12).alias(
             "bipower_var"
         ),
         F.when(
             F.col("rv_micro2") > 0,
-            _r6(
+            r6(
                 F.greatest(
                     F.lit(0.0),
                     (
@@ -470,8 +461,8 @@ sq AS (
          CAST(sum(rq_micro * rq_micro) AS BIGINT) AS sqxx
   FROM q WHERE wn = {_VR_Q} GROUP BY 1)
 SELECT s1.user_id, n1, nq,
-  {_R6_SQL.format(
-      x=f"(CAST(nq AS DOUBLE) * sqxx - CAST(sqx AS DOUBLE) * sqx)"
+  {r6_sql(
+      f"(CAST(nq AS DOUBLE) * sqxx - CAST(sqx AS DOUBLE) * sqx)"
         f" / (CAST(nq AS DOUBLE) * nq)"
         f" / ({_VR_Q} * (CAST(n1 AS DOUBLE) * s1xx"
         f" - CAST(s1x AS DOUBLE) * s1x) / (CAST(n1 AS DOUBLE) * n1))")}
@@ -552,7 +543,7 @@ def variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "n1",
             "nq",
-            _r6(varq / (_VR_Q * var1)).alias("variance_ratio"),
+            r6(varq / (_VR_Q * var1)).alias("variance_ratio"),
         )
     )
 
@@ -585,8 +576,8 @@ b AS (
 SELECT user_id, count(*) AS n_buckets,
        CAST(sum(abs(buy_cents - sell_cents)) AS BIGINT) AS imb_cents,
        CAST(sum(buy_cents + sell_cents) AS BIGINT) AS vol_cents,
-       {_R6_SQL.format(
-           x="CAST(sum(abs(buy_cents - sell_cents)) AS DOUBLE)"
+       {r6_sql(
+           "CAST(sum(abs(buy_cents - sell_cents)) AS DOUBLE)"
              " / sum(buy_cents + sell_cents)")} AS vpin
 FROM b GROUP BY 1
 """
@@ -652,7 +643,7 @@ def vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("buy_cents") + F.col("sell_cents"))
         .cast("long")
         .alias("vol_cents"),
-        _r6(
+        r6(
             F.sum(F.abs(F.col("buy_cents") - F.col("sell_cents"))).cast(
                 "double"
             )
@@ -670,8 +661,6 @@ _LB_DELTA = 3600
 
 
 def _lb_oracle() -> str:
-    from dissertation_iceberg_spark.queries.oi_variants import _oi_cents_sql
-
     lag_blocks = "\nUNION ALL\n".join(
         f"""
 SELECT {k} AS lag_k, count(*) AS n_k,
@@ -689,7 +678,7 @@ WHERE y IS NOT NULL
 WITH lob AS ({EVENTS_LOB_SQL}),
 b AS (
   SELECT {bin_end_sql("ts", _LB_DELTA)} AS bin,
-         {_oi_cents_sql("TRUE")} AS oi
+         {oi_sql()} AS oi
   FROM lob GROUP BY 1),
 grid AS (
   SELECT unnest(generate_series((SELECT min(bin) FROM b),
@@ -714,8 +703,8 @@ e AS (
 SELECT CAST(max(n_k + lag_k) AS BIGINT) AS n_series,
        CAST({len(_LB_LAGS)} AS BIGINT) AS df,
        CAST(sum(contrib_pico) AS BIGINT) AS contrib_pico_sum,
-       {_R6_SQL.format(
-           x="CAST(max(n_k + lag_k) AS DOUBLE) * (max(n_k + lag_k) + 2)"
+       {r6_sql(
+           "CAST(max(n_k + lag_k) AS DOUBLE) * (max(n_k + lag_k) + 2)"
              " * (CAST(sum(contrib_pico) AS DOUBLE) / 1e12)")} AS lb_q
 FROM e
 """
@@ -741,15 +730,11 @@ def ljung_box_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; everything after runs on the O(bins) frame (720 rows
     at sf0.1 — a documented bounded single-partition window, same
     class as oi_acf)."""
-    from dissertation_iceberg_spark.operators.order_imbalance import densify
-    from dissertation_iceberg_spark.queries.oi_variants import _oi_cents
-
-    lob = _lob_cents(spark, sf_dir)
-    d, c = F.col("direction"), F.col("cents")
+    lob = lob_events(spark, sf_dir)
     b = (
         lob.withColumn("bin", bin_end("ts", _LB_DELTA))
         .groupBy("bin")
-        .agg(_oi_cents(d, c, F.lit(True)).alias("oi"))
+        .agg(oi_expr().alias("oi"))
     )
     m = densify(b, _LB_DELTA, zero_fill=("oi",)).select(
         "bin", F.round(F.col("oi") * 1e6).cast("long").alias("oi_micro")
@@ -791,7 +776,7 @@ def ljung_box_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
         nmax.cast("long").alias("n_series"),
         F.lit(len(_LB_LAGS)).cast("long").alias("df"),
         F.sum("contrib_pico").cast("long").alias("contrib_pico_sum"),
-        _r6(
+        r6(
             nmax.cast("double")
             * (nmax + 2)
             * (F.sum("contrib_pico").cast("double") / 1e12)
@@ -827,10 +812,10 @@ v AS (
   FROM n JOIN pairs p ON n.event_type = p.event_type
   JOIN ties t ON n.event_type = t.event_type)
 SELECT event_type, n_days, s AS s_stat,
-       {_R6_SQL.format(x="var_s")} AS var_s,
+       {r6_sql("var_s")} AS var_s,
        CASE WHEN var_s > 0 THEN
-         {_R6_SQL.format(
-             x="CASE WHEN s > 0 THEN (CAST(s AS DOUBLE) - 1) / sqrt(var_s)"
+         {r6_sql(
+             "CASE WHEN s > 0 THEN (CAST(s AS DOUBLE) - 1) / sqrt(var_s)"
                " WHEN s < 0 THEN (CAST(s AS DOUBLE) + 1) / sqrt(var_s)"
                " ELSE 0.0 END")}
        END AS mk_z
@@ -904,8 +889,8 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "n_days",
             F.col("s").alias("s_stat"),
-            _r6(var_s).alias("var_s"),
-            F.when(var_s > 0, _r6(z)).alias("mk_z"),
+            r6(var_s).alias("var_s"),
+            F.when(var_s > 0, r6(z)).alias("mk_z"),
         )
     )
 
@@ -919,8 +904,6 @@ _HURST_DELTA = 3600
 
 
 def _hurst_oracle() -> str:
-    from dissertation_iceberg_spark.queries.oi_variants import _oi_cents_sql
-
     size_blocks = "\nUNION ALL\n".join(
         f"""
 SELECT {m} AS m, count(*) AS n_blocks,
@@ -950,7 +933,7 @@ FROM (
 WITH lob AS ({EVENTS_LOB_SQL}),
 b AS (
   SELECT {bin_end_sql("ts", _HURST_DELTA)} AS bin,
-         {_oi_cents_sql("TRUE")} AS oi
+         {oi_sql()} AS oi
   FROM lob GROUP BY 1),
 grid AS (
   SELECT unnest(generate_series((SELECT min(bin) FROM b),
@@ -970,8 +953,8 @@ xy AS (
               AS BIGINT) AS ly
   FROM sizes WHERE rs_micro_sum > 0)
 SELECT m, n_blocks, mean_rs,
-  {_R6_SQL.format(
-      x="(CAST(count(*) OVER () AS DOUBLE) * sum(CAST(lx AS DOUBLE) * ly)"
+  {r6_sql(
+      "(CAST(count(*) OVER () AS DOUBLE) * sum(CAST(lx AS DOUBLE) * ly)"
         " OVER () - CAST(sum(lx) OVER () AS DOUBLE) * sum(ly) OVER ())"
         " / (CAST(count(*) OVER () AS DOUBLE)"
         " * sum(CAST(lx AS DOUBLE) * lx) OVER ()"
@@ -1003,15 +986,11 @@ def hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame is O(bins) (720 rows at sf0.1 — documented bounded
     single-partition class, like oi_acf/ljung_box); block windows are
     keyed by block id so even a years-long series would shard."""
-    from dissertation_iceberg_spark.operators.order_imbalance import densify
-    from dissertation_iceberg_spark.queries.oi_variants import _oi_cents
-
-    lob = _lob_cents(spark, sf_dir)
-    d, c = F.col("direction"), F.col("cents")
+    lob = lob_events(spark, sf_dir)
     b = (
         lob.withColumn("bin", bin_end("ts", _HURST_DELTA))
         .groupBy("bin")
-        .agg(_oi_cents(d, c, F.lit(True)).alias("oi"))
+        .agg(oi_expr().alias("oi"))
     )
     z = (
         densify(b, _HURST_DELTA, zero_fill=("oi",))
@@ -1092,7 +1071,7 @@ def hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope = (nd * sxy - sx.cast("double") * sy) / (
         nd * sxx - sx.cast("double") * sx
     )
-    return xy.select("m", "n_blocks", "mean_rs", _r6(slope).alias("hurst"))
+    return xy.select("m", "n_blocks", "mean_rs", r6(slope).alias("hurst"))
 
 
 # --------------------------------------------------------------------------
@@ -1129,8 +1108,8 @@ j AS (
   JOIN ty ON n.event_type = ty.event_type)
 SELECT event_type, n_days, c AS n_concordant, disc AS n_discordant,
        CASE WHEN n0 - n1 > 0 AND n0 - n2 > 0 THEN
-         {_R6_SQL.format(
-             x="CAST(c - disc AS DOUBLE)"
+         {r6_sql(
+             "CAST(c - disc AS DOUBLE)"
                " / sqrt(CAST(n0 - n1 AS DOUBLE) * (n0 - n2))")}
        END AS tau_b
 FROM j
@@ -1217,7 +1196,7 @@ def kendall_tau_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("disc").alias("n_discordant"),
         F.when(
             (F.col("n0") - F.col("n1") > 0) & (F.col("n0") - F.col("n2") > 0),
-            _r6(tau),
+            r6(tau),
         ).alias("tau_b"),
     )
 
@@ -1230,15 +1209,13 @@ _GC_DELTA = 3600
 
 
 def _gc_oracle() -> str:
-    from dissertation_iceberg_spark.queries.oi_variants import _oi_cents_sql
-
     def block(tag: str, y: str, v: str) -> str:
         return f"""
 SELECT '{tag}' AS direction, n,
-  {_R6_SQL.format(x="(syv * suu - syu * suv) / (suu * svv - suv * suv)")}
+  {r6_sql("(syv * suu - syu * suv) / (suu * svv - suv * suv)")}
     AS beta_cross,
-  {_R6_SQL.format(
-      x="((syy - syu * syu / suu)"
+  {r6_sql(
+      "((syy - syu * syu / suu)"
         " - (syy - (syu * syu * svv - 2 * syu * syv * suv"
         "          + syv * syv * suu) / (suu * svv - suv * suv)))"
         " * (n - 3)"
@@ -1267,7 +1244,7 @@ WHERE suu > 0 AND (suu * svv - suv * suv) <> 0
 WITH lob AS ({EVENTS_LOB_SQL}),
 b AS (
   SELECT {bin_end_sql("ts", _GC_DELTA)} AS bin,
-         CAST(round({_oi_cents_sql("TRUE")} * 1e6) AS BIGINT) AS oi_micro,
+         CAST(round({oi_sql()} * 1e6) AS BIGINT) AS oi_micro,
          {_LN_MICRO_SQL.format(x="max_by(" + _CENTS + ", event_id)")}
            - {_LN_MICRO_SQL.format(x="min_by(" + _CENTS + ", event_id)")}
            AS r_micro
@@ -1304,15 +1281,12 @@ def granger_oi_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side binned aggregate at fact scale, then
     lags + moments on the O(bins) frame (720 rows at sf0.1; bounded
     single-partition class, like oi_acf)."""
-    from dissertation_iceberg_spark.queries.oi_variants import _oi_cents
-
     lob = _lob_cents(spark, sf_dir)
-    d, c = F.col("direction"), F.col("cents")
     b = (
         lob.withColumn("bin", bin_end("ts", _GC_DELTA))
         .groupBy("bin")
         .agg(
-            F.round(_oi_cents(d, c, F.lit(True)) * 1e6)
+            F.round(oi_expr() * 1e6)
             .cast("long")
             .alias("oi_micro"),
             (
@@ -1360,8 +1334,8 @@ def granger_oi_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         return s.filter((suu > 0) & (det != 0)).select(
             F.lit(tag).alias("direction"),
             "n",
-            _r6((syv * suu - syu * suv) / det).alias("beta_cross"),
-            _r6((rss_r - rss_u) * (F.col("n") - 3) / rss_u).alias("f_stat"),
+            r6((syv * suu - syu * suv) / det).alias("beta_cross"),
+            r6((rss_r - rss_u) * (F.col("n") - 3) / rss_u).alias("f_stat"),
         )
 
     return block("oi_to_ret", "r_micro", "lag_r", "lag_oi").unionByName(
@@ -1408,10 +1382,10 @@ m AS (
            AS s_micro
   FROM a)
 SELECT user_id, count(*) AS n_pairs,
-       {_R6_SQL.format(x="CAST(sum(s_micro) AS DOUBLE) / count(*) / 1e6")}
+       {r6_sql("CAST(sum(s_micro) AS DOUBLE) / count(*) / 1e6")}
          AS cs_spread,
-       {_R6_SQL.format(
-           x="CAST(sum(greatest(s_micro, 0)) AS DOUBLE) / count(*) / 1e6")}
+       {r6_sql(
+           "CAST(sum(greatest(s_micro, 0)) AS DOUBLE) / count(*) / 1e6")}
          AS cs_spread_clamped
 FROM m GROUP BY 1
 """
@@ -1469,10 +1443,10 @@ def corwin_schultz_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return m.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_pairs"),
-        _r6(F.sum("s_micro").cast("double") / F.count(F.lit(1)) / 1e6).alias(
+        r6(F.sum("s_micro").cast("double") / F.count(F.lit(1)) / 1e6).alias(
             "cs_spread"
         ),
-        _r6(
+        r6(
             F.sum(F.greatest(F.col("s_micro"), F.lit(0))).cast("double")
             / F.count(F.lit(1))
             / 1e6
@@ -1489,8 +1463,6 @@ _PG_DELTA = 3600
 
 
 def _pg_oracle() -> str:
-    from dissertation_iceberg_spark.queries.oi_variants import _oi_cents_sql
-
     k_blocks = "\nUNION ALL\n".join(
         f"""
 SELECT {k} AS k,
@@ -1507,7 +1479,7 @@ FROM z
 WITH lob AS ({EVENTS_LOB_SQL}),
 b AS (
   SELECT {bin_end_sql("ts", _PG_DELTA)} AS bin,
-         {_oi_cents_sql("TRUE")} AS oi
+         {oi_sql()} AS oi
   FROM lob GROUP BY 1),
 grid AS (
   SELECT unnest(generate_series((SELECT min(bin) FROM b),
@@ -1520,9 +1492,9 @@ z AS (
   FROM grid g LEFT JOIN b ON g.bin = b.bin),
 ks AS ({k_blocks})
 SELECT k, n_series,
-  {_R6_SQL.format(x="CAST(n_series AS DOUBLE) / k")} AS period_hours,
-  {_R6_SQL.format(
-      x="((CAST(sc_pico AS DOUBLE) / 1e12) * (CAST(sc_pico AS DOUBLE) / 1e12)"
+  {r6_sql("CAST(n_series AS DOUBLE) / k")} AS period_hours,
+  {r6_sql(
+      "((CAST(sc_pico AS DOUBLE) / 1e12) * (CAST(sc_pico AS DOUBLE) / 1e12)"
         " + (CAST(ss_pico AS DOUBLE) / 1e12) * (CAST(ss_pico AS DOUBLE) / 1e12))"
         " / n_series * 1e3")} AS power_x1e3
 FROM ks
@@ -1548,15 +1520,11 @@ def oi_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: fact work is the binned aggregate; the trig sums run
     over the O(bins) frame once per k (6 passes over ≤720 rows at
     sf0.1 — bounded single-partition class, like oi_acf)."""
-    from dissertation_iceberg_spark.operators.order_imbalance import densify
-    from dissertation_iceberg_spark.queries.oi_variants import _oi_cents
-
-    lob = _lob_cents(spark, sf_dir)
-    d, c = F.col("direction"), F.col("cents")
+    lob = lob_events(spark, sf_dir)
     b = (
         lob.withColumn("bin", bin_end("ts", _PG_DELTA))
         .groupBy("bin")
-        .agg(_oi_cents(d, c, F.lit(True)).alias("oi"))
+        .agg(oi_expr().alias("oi"))
     )
     z = densify(b, _PG_DELTA, zero_fill=("oi",)).select(
         F.round(F.col("oi") * 1e6).cast("long").alias("x"),
@@ -1590,10 +1558,10 @@ def oi_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ks.select(
         "k",
         "n_series",
-        _r6(F.col("n_series").cast("double") / F.col("k")).alias(
+        r6(F.col("n_series").cast("double") / F.col("k")).alias(
             "period_hours"
         ),
-        _r6((sc * sc + ss * ss) / F.col("n_series") * 1e3).alias("power_x1e3"),
+        r6((sc * sc + ss * ss) / F.col("n_series") * 1e3).alias("power_x1e3"),
     )
 
 
@@ -1638,10 +1606,10 @@ agg AS (
          sum(var_g) AS var_s
   FROM per GROUP BY 1)
 SELECT event_type, n_days, s_stat,
-       {_R6_SQL.format(x="var_s")} AS var_s,
+       {r6_sql("var_s")} AS var_s,
        CASE WHEN var_s > 0 THEN
-         {_R6_SQL.format(
-             x="CASE WHEN s_stat > 0 THEN (CAST(s_stat AS DOUBLE) - 1) / sqrt(var_s)"
+         {r6_sql(
+             "CASE WHEN s_stat > 0 THEN (CAST(s_stat AS DOUBLE) - 1) / sqrt(var_s)"
                " WHEN s_stat < 0 THEN (CAST(s_stat AS DOUBLE) + 1) / sqrt(var_s)"
                " ELSE 0.0 END")}
        END AS smk_z
@@ -1744,6 +1712,6 @@ def seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_days",
         "s_stat",
-        _r6(var_s).alias("var_s"),
-        F.when(var_s > 0, _r6(z)).alias("smk_z"),
+        r6(var_s).alias("var_s"),
+        F.when(var_s > 0, r6(z)).alias("smk_z"),
     )

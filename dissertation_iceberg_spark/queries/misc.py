@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dissertation_iceberg_spark.functions.exact import r6, r6_sql
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
 from dissertation_iceberg_spark.io import load_table
 from dissertation_iceberg_spark.functions.scalars import (
@@ -31,8 +32,8 @@ WITH e AS (
          CAST(json_extract(props, '$.k') AS BIGINT) % 100 AS k
   FROM events)
 SELECT {bin_end_sql("ts", DELTA)} AS bin,
-       round(CAST(sum(cents * (100 - 2 * k)) AS DOUBLE)
-             / (100 * sum(cents)), 6) AS weighted_oi,
+       {r6_sql("CAST(sum(cents * (100 - 2 * k)) AS DOUBLE) / (100 * sum(cents))")}
+         AS weighted_oi,
        count(*) AS n
 FROM e GROUP BY 1
 """
@@ -51,10 +52,9 @@ def weighted_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.withColumn("bin", bin_end("ts", DELTA))
         .groupBy("bin")
         .agg(
-            F.round(
+            r6(
                 F.sum(F.col("cents") * (100 - 2 * F.col("k"))).cast("double")
-                / (100 * F.sum("cents")),
-                6,
+                / (100 * F.sum("cents"))
             ).alias("weighted_oi"),
             F.count(F.lit(1)).alias("n"),
         )

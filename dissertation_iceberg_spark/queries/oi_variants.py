@@ -4,7 +4,9 @@ All conditional-OI variants are computed in ONE aggregation pass with
 predicate-split sums (the reference computes each subset separately and
 merges frames — J4/J5/J6; a single grouped pass is the Spark-first
 equivalent with identical results and one shuffle instead of N+N joins).
-Sums use integer cents so every ratio is bit-identical across engines.
+Every OI column comes from the shared kernel
+(``operators.order_imbalance.oi_sql``: integer-cents sums, one SQL
+string for both engines) and is rounded on the integer 6-dp grid.
 """
 
 from __future__ import annotations
@@ -12,36 +14,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dissertation_iceberg_spark.functions.exact import cents_sql, r6, r6_sql
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
 from dissertation_iceberg_spark.io import load_table, lob_events
+from dissertation_iceberg_spark.operators.order_imbalance import (
+    densify,
+    oi_expr,
+    oi_sql,
+)
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.queries.sqlgen import EVENTS_LOB_SQL
 
 DELTA = 21_600  # 6-hour bins for variant queries (denser per-bin counts)
-
-_CENTS = "CAST(round(value * 100) AS BIGINT)"
-
-
-def _lob_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return lob_events(spark, sf_dir).withColumn(
-        "cents", F.round(F.col("value") * 100).cast("long")
-    )
-
-
-def _oi_cents(dir_col, cents, pred):
-    sell = F.sum(F.when((dir_col == -1) & pred, cents).otherwise(F.lit(0)))
-    buy = F.sum(F.when((dir_col == 1) & pred, cents).otherwise(F.lit(0)))
-    return F.when((sell + buy) != 0, (sell - buy) / (sell + buy))
-
-
-def _oi_cents_sql(pred: str) -> str:
-    sell = f"sum(CASE WHEN direction=-1 AND {pred} THEN {_CENTS} ELSE 0 END)"
-    buy = f"sum(CASE WHEN direction=1 AND {pred} THEN {_CENTS} ELSE 0 END)"
-    return (
-        f"CASE WHEN ({sell} + {buy}) <> 0 "
-        f"THEN CAST({sell} - {buy} AS DOUBLE) / ({sell} + {buy}) END"
-    )
-
 
 # --------------------------------------------------------------------------
 # J4 combined vis/hid OI (inner-presence semantics)
@@ -51,8 +35,8 @@ _COMBINED_ORACLE = f"""
 WITH lob AS ({EVENTS_LOB_SQL})
 SELECT * FROM (
   SELECT {bin_end_sql("ts", DELTA)} AS bin,
-         round({_oi_cents_sql("event_type = 'purchase'")}, 6) AS oi_vis,
-         round({_oi_cents_sql("event_type = 'error'")}, 6) AS oi_hid
+         {r6_sql(oi_sql("event_type = 'purchase'"))} AS oi_vis,
+         {r6_sql(oi_sql("event_type = 'error'"))} AS oi_hid
   FROM lob GROUP BY 1)
 WHERE oi_vis IS NOT NULL AND oi_hid IS NOT NULL
 """
@@ -63,14 +47,13 @@ def combined_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4: visible-OI ⨝ hidden-OI per bin (order_imbalance.py:328-335)
     — one predicate-split pass; inner-merge semantics = both legs
     present."""
-    df = _lob_cents(spark, sf_dir)
-    d, c = F.col("direction"), F.col("cents")
+    df = lob_events(spark, sf_dir)
     return (
         df.withColumn("bin", bin_end("ts", DELTA))
         .groupBy("bin")
         .agg(
-            F.round(_oi_cents(d, c, F.col("event_type") == "purchase"), 6).alias("oi_vis"),
-            F.round(_oi_cents(d, c, F.col("event_type") == "error"), 6).alias("oi_hid"),
+            r6(oi_expr("event_type = 'purchase'")).alias("oi_vis"),
+            r6(oi_expr("event_type = 'error'")).alias("oi_hid"),
         )
         .filter(F.col("oi_vis").isNotNull() & F.col("oi_hid").isNotNull())
     )
@@ -84,8 +67,8 @@ _VHI_ORACLE = f"""
 WITH lob AS ({EVENTS_LOB_SQL})
 SELECT bin, oi_vis, coalesce(oi_hid, 0) AS oi_hid FROM (
   SELECT {bin_end_sql("ts", DELTA)} AS bin,
-         round({_oi_cents_sql("event_type = 'purchase'")}, 6) AS oi_vis,
-         round({_oi_cents_sql("event_type = 'error'")}, 6) AS oi_hid
+         {r6_sql(oi_sql("event_type = 'purchase'"))} AS oi_vis,
+         {r6_sql(oi_sql("event_type = 'error'"))} AS oi_hid
   FROM lob GROUP BY 1)
 WHERE oi_vis IS NOT NULL
 """
@@ -95,14 +78,13 @@ WHERE oi_vis IS NOT NULL
 def vhi_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5: vis-OI left-joined with hid-OI, missing hid leg -> 0
     (order_imbalance.py:408-414)."""
-    df = _lob_cents(spark, sf_dir)
-    d, c = F.col("direction"), F.col("cents")
+    df = lob_events(spark, sf_dir)
     return (
         df.withColumn("bin", bin_end("ts", DELTA))
         .groupBy("bin")
         .agg(
-            F.round(_oi_cents(d, c, F.col("event_type") == "purchase"), 6).alias("oi_vis"),
-            F.round(_oi_cents(d, c, F.col("event_type") == "error"), 6).alias("oi_hid"),
+            r6(oi_expr("event_type = 'purchase'")).alias("oi_vis"),
+            r6(oi_expr("event_type = 'error'")).alias("oi_hid"),
         )
         .filter(F.col("oi_vis").isNotNull())
         .withColumn("oi_hid", F.coalesce(F.col("oi_hid"), F.lit(0.0)))
@@ -142,9 +124,9 @@ t AS (
                            ORDER BY value, event_id) AS tercile
   FROM lob)
 SELECT {bin_end_sql("ts", DELTA)} AS bin,
-       round({_oi_cents_sql("tercile = 1")}, 6) AS oi_small,
-       round({_oi_cents_sql("tercile = 2")}, 6) AS oi_medium,
-       round({_oi_cents_sql("tercile = 3")}, 6) AS oi_large
+       {r6_sql(oi_sql("tercile = 1"))} AS oi_small,
+       {r6_sql(oi_sql("tercile = 2"))} AS oi_medium,
+       {r6_sql(oi_sql("tercile = 3"))} AS oi_large
 FROM t GROUP BY 1
 """
 
@@ -153,19 +135,18 @@ FROM t GROUP BY 1
 def conditional_oi_terciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4/J6: conditional OI per size class in one pass — replaces the
     reference's loop-of-merges (order_imbalance.py:452-475)."""
-    df = _lob_cents(spark, sf_dir)
+    df = lob_events(spark, sf_dir)
     w = Window.partitionBy(F.date_trunc("day", F.col("ts"))).orderBy(
         "value", "event_id"
     )
     df = df.withColumn("tercile", F.ntile(3).over(w))
-    d, c = F.col("direction"), F.col("cents")
     return (
         df.withColumn("bin", bin_end("ts", DELTA))
         .groupBy("bin")
         .agg(
-            F.round(_oi_cents(d, c, F.col("tercile") == 1), 6).alias("oi_small"),
-            F.round(_oi_cents(d, c, F.col("tercile") == 2), 6).alias("oi_medium"),
-            F.round(_oi_cents(d, c, F.col("tercile") == 3), 6).alias("oi_large"),
+            r6(oi_expr("tercile = 1")).alias("oi_small"),
+            r6(oi_expr("tercile = 2")).alias("oi_medium"),
+            r6(oi_expr("tercile = 3")).alias("oi_large"),
         )
     )
 
@@ -278,10 +259,10 @@ def factor_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RESAMPLE_ORACLE = f"""
 SELECT {bin_end_sql("ts", DELTA)} AS bin,
        count(CASE WHEN event_type = 'purchase' THEN 1 END) AS n_vis,
-       sum(CASE WHEN event_type = 'purchase' THEN {_CENTS} ELSE 0 END) / 100.0
+       sum(CASE WHEN event_type = 'purchase' THEN {cents_sql("value")} ELSE 0 END) / 100.0
            AS sum_vis,
        round(CASE WHEN count(CASE WHEN event_type = 'purchase' THEN 1 END) > 0
-             THEN (sum(CASE WHEN event_type = 'purchase' THEN {_CENTS} ELSE 0 END)
+             THEN (sum(CASE WHEN event_type = 'purchase' THEN {cents_sql("value")} ELSE 0 END)
                    / 100.0)
                   / count(CASE WHEN event_type = 'purchase' THEN 1 END) END, 6)
            AS mean_vis
@@ -315,9 +296,9 @@ def resample_mean_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RATIO_ORACLE = f"""
 SELECT {bin_end_sql("ts", DELTA)} AS bin,
-  round(CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN {_CENTS} ELSE 0 END) <> 0
-        THEN CAST(sum(CASE WHEN event_type = 'error' THEN {_CENTS} ELSE 0 END) AS DOUBLE)
-             / sum(CASE WHEN event_type = 'purchase' THEN {_CENTS} ELSE 0 END) END, 6)
+  round(CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN {cents_sql("value")} ELSE 0 END) <> 0
+        THEN CAST(sum(CASE WHEN event_type = 'error' THEN {cents_sql("value")} ELSE 0 END) AS DOUBLE)
+             / sum(CASE WHEN event_type = 'purchase' THEN {cents_sql("value")} ELSE 0 END) END, 6)
       AS hid_vis_ratio
 FROM events GROUP BY 1
 """
@@ -352,7 +333,7 @@ _MULTI_ORACLE = "\nUNION ALL\n".join(
     f"""
 SELECT CAST({d} AS BIGINT) AS delta_sec, bin, oi FROM (
   SELECT {bin_end_sql("ts", d)} AS bin,
-         round({_oi_cents_sql("TRUE")}, 6) AS oi
+         {r6_sql(oi_sql())} AS oi
   FROM ({EVENTS_LOB_SQL}) lob GROUP BY 1)
 """
     for d in _DELTAS
@@ -374,8 +355,7 @@ def multi_delta_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(deltas x bins) partially-aggregated rows, and the fact is read
     once — at 100 TB that is 1/3 the I/O for the identical result set
     (same groups, same exact integer-cents aggregation per group)."""
-    df = _lob_cents(spark, sf_dir)
-    d, c = F.col("direction"), F.col("cents")
+    df = lob_events(spark, sf_dir)
     keys = F.explode(
         F.array(
             *[
@@ -388,12 +368,12 @@ def multi_delta_oi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        df.select("direction", "cents", keys.alias("db"))
+        df.select("direction", "size", keys.alias("db"))
         .groupBy(
             F.col("db.delta_sec").alias("delta_sec"),
             F.col("db.bin").alias("bin"),
         )
-        .agg(F.round(_oi_cents(d, c, F.lit(True)), 6).alias("oi"))
+        .agg(r6(oi_expr()).alias("oi"))
     )
 
 
@@ -407,7 +387,7 @@ _ACF_ORACLE = f"""
 WITH lob AS ({EVENTS_LOB_SQL}),
 b AS (
   SELECT {bin_end_sql("ts", 3600)} AS bin,
-         {_oi_cents_sql("TRUE")} AS oi
+         {oi_sql()} AS oi
   FROM lob GROUP BY 1),
 grid AS (
   SELECT unnest(generate_series((SELECT min(bin) FROM b),
@@ -431,14 +411,11 @@ def oi_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A13: autocorrelation of the densified OI series by lag
     (timeseries_analysis.ipynb cells 2-5) — lag columns + corr aggs on
     the already-tiny binned frame."""
-    from dissertation_iceberg_spark.operators.order_imbalance import densify
-
-    df = _lob_cents(spark, sf_dir)
-    d, c = F.col("direction"), F.col("cents")
+    df = lob_events(spark, sf_dir)
     b = (
         df.withColumn("bin", bin_end("ts", 3600))
         .groupBy("bin")
-        .agg(_oi_cents(d, c, F.lit(True)).alias("oi"))
+        .agg(oi_expr().alias("oi"))
     )
     s = densify(b, 3600, zero_fill=("oi",))
     w = Window.orderBy("bin")

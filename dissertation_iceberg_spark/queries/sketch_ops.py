@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dissertation_iceberg_spark.functions.exact import r6
 from dissertation_iceberg_spark.functions.hashing import (
     hash60,
     hash60_sql,
@@ -134,13 +135,6 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BLOOM_BITS = 1 << 16
 _BLOOM_K = 4
 _BLOOM_BUILD_SOURCE = "src0"  # driver fixture sources: src0..src19
-
-
-def _bloom_positions_sql(expr: str) -> str:
-    return " UNION ALL ".join(
-        f"SELECT {_seeded_hash_sql(str(i), expr)} % {_BLOOM_BITS} AS bit"
-        for i in range(_BLOOM_K)
-    )
 
 
 _BLOOM_ORACLE = f"""
@@ -1367,9 +1361,6 @@ def kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.when(n < _KMV_K, n.cast("double")).otherwise(
             (_KMV_K - 1) * float(_KMV_H) / theta
         )
-
-    def r6(col):
-        return F.round(col * 1e6).cast("long") / 1e6
 
     ea = te.select(
         F.col("event_type").alias("ta"),

@@ -24,9 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dissertation_iceberg_spark.functions.exact import r6, r6_sql
 from dissertation_iceberg_spark.io import load_table
 from dissertation_iceberg_spark.operators import text as tx
-from dissertation_iceberg_spark.queries.microstructure import _R6_SQL, _r6
 from dissertation_iceberg_spark.operators.strategy import cross_sectional_select
 from dissertation_iceberg_spark.functions.scalars import (
     explode_grid,
@@ -34,6 +34,7 @@ from dissertation_iceberg_spark.functions.scalars import (
 )
 from dissertation_iceberg_spark.queries.registry import register
 from dissertation_iceberg_spark.queries.strategy import _SIGNAL_SQL, _signals
+from dissertation_iceberg_spark.session import pin
 
 _TOKENS = "list_filter(str_split(text, ' '), x -> x <> '')"
 
@@ -2845,9 +2846,9 @@ q AS (
            OVER () AS i_star
   FROM r)
 SELECT event_type, CAST(bucket AS BIGINT) AS bucket, n_c AS n_events,
-       {_R6_SQL.format(x="zv")} AS z_score,
+       {r6_sql("zv")} AS z_score,
        p_micro, CAST(i AS BIGINT) AS p_rank,
-       {_R6_SQL.format(x="qv")} AS q_value,
+       {r6_sql("qv")} AS q_value,
        CAST(CASE WHEN i <= i_star THEN 1 ELSE 0 END AS BIGINT) AS rejected
 FROM q
 """
@@ -2962,10 +2963,10 @@ def bh_fdr_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("bucket").cast("long").alias("bucket"),
         F.col("n_c").cast("long").alias("n_events"),
-        _r6(F.col("zv")).alias("z_score"),
+        r6(F.col("zv")).alias("z_score"),
         "p_micro",
         F.col("i").cast("long").alias("p_rank"),
-        _r6(F.col("qv")).alias("q_value"),
+        r6(F.col("qv")).alias("q_value"),
         F.when(F.col("i") <= F.col("i_star"), F.lit(1))
         .otherwise(F.lit(0))
         .cast("long")
@@ -3888,14 +3889,13 @@ def _lgamma_table(spark: SparkSession, m: int) -> DataFrame:
     # the constant-key lookup, and the lambda-free-but-subquery-bearing
     # cumsum lineage defeats exchange reuse — without this the whole
     # O(trials) build re-runs per consumer (measured 9x before the
-    # round-7 restructure). At cluster scale prefer persist(DISK) /
-    # reliable checkpoint: localCheckpoint pins to executor storage,
-    # so an executor loss kills the lineage (SCALE.md, checkpoint
+    # round-7 restructure). ``session.pin`` picks the durability tier
+    # (SPARK_GRAFT_PIN=reliable for cluster runs, SCALE.md checkpoint
     # durability note).
     return (
         bucketed_exclusive_cumsums(lgbase, "j", ["lnj"])
         .select("j", F.col("cum_lnj").alias("lgam"))
-        .localCheckpoint()
+        .transform(pin)
     )
 
 

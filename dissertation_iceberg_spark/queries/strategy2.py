@@ -292,31 +292,22 @@ def percentile_sweep_pnl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
 from dissertation_iceberg_spark.io import lob_events
+from dissertation_iceberg_spark.operators.order_imbalance import oi_expr, oi_sql
 from dissertation_iceberg_spark.queries.sqlgen import EVENTS_LOB_SQL
 
 _XC_DELTAS = (3600, 21600)
-
-_CENTS = "CAST(round(value * 100) AS BIGINT)"
 
 
 def _xc_oracle() -> str:
     parts = []
     for d in _XC_DELTAS:
-        oi = lambda pred: (  # noqa: E731
-            f"CASE WHEN (sum(CASE WHEN direction=-1 AND {pred} THEN {_CENTS} ELSE 0 END)"
-            f" + sum(CASE WHEN direction=1 AND {pred} THEN {_CENTS} ELSE 0 END)) <> 0 "
-            f"THEN CAST(sum(CASE WHEN direction=-1 AND {pred} THEN {_CENTS} ELSE 0 END)"
-            f" - sum(CASE WHEN direction=1 AND {pred} THEN {_CENTS} ELSE 0 END) AS DOUBLE)"
-            f" / (sum(CASE WHEN direction=-1 AND {pred} THEN {_CENTS} ELSE 0 END)"
-            f" + sum(CASE WHEN direction=1 AND {pred} THEN {_CENTS} ELSE 0 END)) END"
-        )
         parts.append(
             f"""
 SELECT CAST({d} AS BIGINT) AS delta_sec, round(corr(oi_vis, oi_hid), 6) AS xcorr
 FROM (
   SELECT {bin_end_sql("ts", d)} AS bin,
-         {oi("event_type = 'purchase'")} AS oi_vis,
-         {oi("event_type = 'error'")} AS oi_hid
+         {oi_sql("event_type = 'purchase'")} AS oi_vis,
+         {oi_sql("event_type = 'error'")} AS oi_hid
   FROM ({EVENTS_LOB_SQL}) lob GROUP BY 1)
 WHERE oi_vis IS NOT NULL AND oi_hid IS NOT NULL
 """
@@ -328,20 +319,15 @@ WHERE oi_vis IS NOT NULL AND oi_hid IS NOT NULL
 def oi_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A12/time_series_OI: correlation between visible and hidden OI
     series per delta — one frame across deltas."""
-    lob = lob_events(spark, sf_dir).withColumn(
-        "cents", F.round(F.col("value") * 100).cast("long")
-    )
-    from dissertation_iceberg_spark.queries.oi_variants import _oi_cents
-
-    d_, c_ = F.col("direction"), F.col("cents")
+    lob = lob_events(spark, sf_dir)
     parts = []
     for delta in _XC_DELTAS:
         b = (
             lob.withColumn("bin", bin_end("ts", delta))
             .groupBy("bin")
             .agg(
-                _oi_cents(d_, c_, F.col("event_type") == "purchase").alias("oi_vis"),
-                _oi_cents(d_, c_, F.col("event_type") == "error").alias("oi_hid"),
+                oi_expr("event_type = 'purchase'").alias("oi_vis"),
+                oi_expr("event_type = 'error'").alias("oi_hid"),
             )
             .filter(F.col("oi_vis").isNotNull() & F.col("oi_hid").isNotNull())
         )

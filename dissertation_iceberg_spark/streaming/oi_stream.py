@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dissertation_iceberg_spark.operators.order_imbalance import oi_expr
+
 
 def streaming_oi(
     events: DataFrame,
@@ -33,11 +35,10 @@ def streaming_oi(
     """readStream frame -> watermarked tumbling-window conditional OI.
 
     Works identically on batch frames (window() is batch-compatible),
-    which is how tests pin streaming output == batch kernel output.
+    which is how tests pin streaming output == batch kernel output. The
+    OI column is the batch kernel's own expression
+    (``order_imbalance.oi_expr``: exact cents sums).
     """
-    d, s = F.col(dir_col), F.col(size_col)
-    sell = F.sum(F.when(d == -1, s).otherwise(F.lit(0.0)))
-    buy = F.sum(F.when(d == 1, s).otherwise(F.lit(0.0)))
     # materialize the ceil-parity shift as a column BEFORE the
     # watermark: Spark only links a watermark to a window whose time
     # column IS the watermarked column, not an expression over it
@@ -51,9 +52,7 @@ def streaming_oi(
     return (
         df.groupBy(*(group_cols or []), win.alias("win"))
         .agg(
-            F.when((sell + buy) != 0, (sell - buy) / (sell + buy)).alias(
-                "order_imbalance"
-            ),
+            oi_expr(direction=dir_col, size=size_col).alias("order_imbalance"),
             F.count(F.lit(1)).alias("n_events"),
         )
         .select(

@@ -188,6 +188,48 @@ def test_fixture_fuzz_compact_tiny(spark, tmp_path):
     }
 
 
+def test_oi_midpoint_bin_matches_oracles(spark, tmp_path):
+    """One bin holding a sell of 39.73 and a buy of 24.27 has the exact
+    OI 1546/6400 = 0.2415625, a 6-dp midpoint that rounds to 0.241563.
+    Raw double sums land just below it (0.24156249999999996 here, so
+    round(x, 6) gave 0.241562), and with more rows the sum depends on
+    aggregation order, so Spark and DuckDB can round it apart. The
+    shared cents kernel with integer-grid rounding gives 0.241563 in
+    both engines, for the flagship and the iceberg split."""
+    import pandas as pd
+
+    from dissertation_iceberg_spark.queries.registry import REGISTRY, _ensure_loaded
+    from tools.fixture_fuzz import build_fixture
+    from tools.parity import compare_frames, duck_connection
+
+    d = build_fixture("tiny", str(tmp_path))
+    pd.DataFrame(
+        {
+            # odd event_id -> direction -1 (sell), even -> +1 (buy)
+            "event_id": pd.Series([1, 2], dtype="int64"),
+            "ts": pd.to_datetime(
+                ["2024-01-26 22:10:00", "2024-01-26 22:20:00"]
+            ).astype("datetime64[us]"),
+            "user_id": pd.Series([7, 7], dtype="int64"),
+            "event_type": ["purchase", "purchase"],
+            "value": [39.73, 24.27],
+            "props": ['{"k": 1}', '{"k": 2}'],
+        }
+    ).to_parquet(f"{d}/events.parquet", index=False)
+    _ensure_loaded()
+    con = duck_connection(d)
+    for name, col in (
+        ("oi_hourly_densified", "order_imbalance"),
+        ("iceberg_split_oi", "oi_vis"),
+    ):
+        spec = REGISTRY[name]
+        sp = spec.fn(spark, d).toPandas()
+        du = con.execute(spec.oracle).fetchdf()
+        ok, msg = compare_frames(sp, du)
+        assert ok, f"{name}: {msg}"
+        assert list(sp[col]) == [0.241563], name
+
+
 def test_contract_flags_empty_table(spark, tmp_path):
     """A zero-row contract table is out of contract (round-7 tiny
     fuzz boundary): the validator must flag it instead of letting the

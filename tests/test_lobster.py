@@ -11,13 +11,14 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from dissertation_iceberg_spark.functions.exact import r6_sql
 from dissertation_iceberg_spark.functions.time_bins import bin_end, bin_end_sql
 from dissertation_iceberg_spark.operators.iceberg import asof_next_within
 from dissertation_iceberg_spark.operators.lob_features import (
     outside_spread_override,
     with_lob_features,
 )
-from dissertation_iceberg_spark.operators.order_imbalance import oi_pipeline
+from dissertation_iceberg_spark.operators.order_imbalance import oi_pipeline, oi_sql
 from dissertation_iceberg_spark.sources.lobster import (
     read_messages,
     read_orderbook,
@@ -282,12 +283,7 @@ def test_oi_pipeline_per_ticker(lob_df, lob_duck):
         f"""
         WITH b AS (
           SELECT ticker, {bin_end_sql("datetime", 900)} AS bin,
-            CASE WHEN (sum(CASE WHEN direction=-1 THEN size ELSE 0 END)
-                     + sum(CASE WHEN direction=1 THEN size ELSE 0 END)) <> 0
-                 THEN CAST(sum(CASE WHEN direction=-1 THEN size ELSE 0 END)
-                         - sum(CASE WHEN direction=1 THEN size ELSE 0 END) AS DOUBLE)
-                    / (sum(CASE WHEN direction=-1 THEN size ELSE 0 END)
-                     + sum(CASE WHEN direction=1 THEN size ELSE 0 END)) END AS order_imbalance,
+            {oi_sql()} AS order_imbalance,
             count(*) AS n_events,
             min_by(price, seq) AS first_price,
             max_by(price, seq) AS last_price
@@ -303,7 +299,7 @@ def test_oi_pipeline_per_ticker(lob_df, lob_duck):
                  b.first_price, b.last_price,
                  ln(b.last_price) - ln(b.first_price) AS log_ret
           FROM grid g LEFT JOIN b ON g.ticker = b.ticker AND g.bin = b.bin)
-        SELECT ticker, bin, round(order_imbalance, 6) AS order_imbalance, n_events,
+        SELECT ticker, bin, {r6_sql("order_imbalance")} AS order_imbalance, n_events,
                round(first_price, 6) AS first_price, round(last_price, 6) AS last_price,
                round(log_ret, 6) AS log_ret,
                round(lead(log_ret) OVER (PARTITION BY ticker ORDER BY bin), 6)

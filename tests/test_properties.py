@@ -47,9 +47,7 @@ def test_oi_bounded(spark, rows):
     df = spark.createDataFrame(
         [(d, float(s)) for d, s in rows], ["direction", "size"]
     )
-    oi = df.agg(oi_expr(F.col("direction"), F.col("size")).alias("oi")).collect()[0][
-        "oi"
-    ]
+    oi = df.agg(oi_expr().alias("oi")).collect()[0]["oi"]
     assert oi is not None and -1.0 <= oi <= 1.0
     # sign identity: all sells -> +1, all buys -> -1
     if all(d == -1 for d, _ in rows):
@@ -144,6 +142,31 @@ def test_connected_components_chain_triangle(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1,
                    10: 10, 11: 10, 12: 10,
                    20: 20, 21: 20}
+
+
+def test_connected_components_scaled_decimal_ids(spark):
+    """Scaled-decimal ids take the changed-row convergence check: the
+    label-sum check casts to decimal(38,0), which rounds 1.2/1.3/1.4 to
+    the same integer, so it would stop after one sweep with 1.4
+    labelled 1.3."""
+    from decimal import Decimal
+
+    from pyspark.sql.types import DecimalType, StructField, StructType
+
+    from dissertation_iceberg_spark.operators.dedup import connected_components
+
+    dec = DecimalType(3, 1)
+    edges = spark.createDataFrame(
+        [(Decimal("1.2"), Decimal("1.3")), (Decimal("1.3"), Decimal("1.4"))],
+        StructType([StructField("id_a", dec), StructField("id_b", dec)]),
+    )
+    got = {
+        r["id"]: r["label"]
+        for r in connected_components(edges, max_iter=10).collect()
+    }
+    assert got == {Decimal("1.2"): Decimal("1.2"),
+                   Decimal("1.3"): Decimal("1.2"),
+                   Decimal("1.4"): Decimal("1.2")}
 
 
 @settings(max_examples=10, deadline=None)

@@ -505,7 +505,7 @@ def main() -> int:
         d = build_fixture(v, args.out)
         res = run_parity(d, names)
         n_ok = sum(ok for ok, *_ in res.values())
-        for name, (ok, msg) in sorted(res.items()):
+        for name, (ok, msg, _sec) in sorted(res.items()):
             if not ok:
                 print(f"FAIL [{v}] {name}: {msg}")
         print(f"[{v}] {n_ok}/{len(res)} parity-ok at {d}")
